@@ -42,16 +42,19 @@ object Writers {
   /** J3 MERGE-upsert on plain parquet: read target, key-join updates with
     * update-only WHEN MATCHED semantics, rewrite (win-tracker/main.py:
     * 577-634). At scale pair with partition pruning: pass `partitionCol`
-    * so only partitions containing update keys are rewritten. */
+    * so only partitions containing update keys are rewritten. The updates
+    * are evaluated once either way: with a partition column they are
+    * checkpointed, then both name the touched partitions (a broadcast
+    * semi-join the scan prunes on) and feed the key join. */
   def mergeUpsert(spark: SparkSession, targetPath: String, updates: DataFrame,
       keys: Seq[String], updateCols: Seq[String],
       partitionCol: Option[String] = None): Unit = {
     val target = spark.read.parquet(targetPath)
     partitionCol match {
       case Some(p) =>
-        val parts = updates.select(col(p)).distinct()
-        val touched = target.join(broadcast(parts), Seq(p), "left_semi")
-        val merged = Joins.mergeUpdate(touched, updates, keys, updateCols)
+        val once = updates.localCheckpoint()
+        val touched = target.join(broadcast(once.select(col(p))), Seq(p), "left_semi")
+        val merged = Joins.mergeUpdate(touched, once, keys, updateCols)
         // rewrite only the touched partitions (dynamic overwrite)
         val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")

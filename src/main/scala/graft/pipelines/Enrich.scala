@@ -1,8 +1,10 @@
 package graft.pipelines
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.ta.TA
+import graft.functions.FastTA
 
 /** §3.2 enrichment pipeline: per-ticker technicals from a daily-bars table
   * (replacing the reference's per-ticker REST + pandas loop,
@@ -18,6 +20,13 @@ object Enrich {
     * dropped (enrichment-trigger/main.py:320-322). Indicator definitions:
     * Wilder RSI/ATR, ewm(adjust=false) EMA/MACD, sample-stddev Bollinger —
     * the pandas_ta defaults the reference relies on (:335-342).
+    *
+    * One shuffle on ticker collects each ticker's date-sorted bars; then
+    * one compiled kernel ([[graft.functions.FastTA.technicals]]) walks the
+    * bars once and returns every indicator, bit-identical to the
+    * declarative folds of [[graft.ta.TA]]. Rounding (`safe_float`) and the
+    * support/resistance and trend columns stay column algebra over the
+    * kernel's raw doubles.
     */
   def technicals(dailyBars: DataFrame): DataFrame = {
     val grouped = dailyBars
@@ -26,68 +35,48 @@ object Enrich {
         col("date"), col("open"), col("high"), col("low"),
         col("close"), col("volume")))).as("h"))
       .where(size(col("h")) >= 20)
-    val cs = expr("transform(h, x -> x.close)")
-    val hs = expr("transform(h, x -> x.high)")
-    val ls = expr("transform(h, x -> x.low)")
-    val vs = expr("transform(h, x -> x.volume)")
-    val m = size(col("h"))
-    def lastN(arr: Column, n: Int): Column = slice(arr, greatest(m - (n - 1), lit(1)), lit(n))
-    def meanOf(arr: Column): Column =
-      aggregate(arr, lit(0.0), (a, x) => a + x) / size(arr)
-    def smaLast(n: Int): Column = when(m >= n, meanOf(lastN(cs, n)))
-    // sample stddev of the last 20 closes (pandas rolling.std ddof=1)
-    val bbMean = meanOf(lastN(cs, 20))
-    val bbSd = sqrt(aggregate(lastN(cs, 20), lit(0.0),
-      (a, x) => a + (x - bbMean) * (x - bbMean)) / (lit(20) - 1))
-    // OBV final value: sum of sign(close diff) * volume (W5)
-    val obvLast = aggregate(
-      zip_with(
-        zip_with(slice(cs, lit(2), m - 1), slice(cs, lit(1), m - 1), (cur, prev) => cur - prev),
-        slice(vs, lit(2), m - 1),
-        (d, v) => when(d > 0, v).when(d < 0, -v).otherwise(lit(0.0))),
-      lit(0.0), (a, x) => a + x)
     def sf(c: Column): Column = when(!isnan(c), round(c, 4)) // safe_float (:355-357)
-    val base = grouped.select(
-      col("ticker"), m.as("n_bars"),
-      expr("element_at(h, -1).date").as("date"),
-      sf(expr("element_at(h, -1).close")).as("close"),
-      sf(expr("element_at(h, -1).volume")).as("volume"),
-      sf(TA.rsiLast(cs, 14)).as("rsi_14"),
-      TA.macdLast(cs).as("_macd"),
-      sf(smaLast(50)).as("sma_50"),
-      sf(smaLast(200)).as("sma_200"),
-      sf(TA.emaOverList(cs, 21)).as("ema_21"),
-      sf(obvLast).as("obv"),
-      sf(when(m >= 20, bbMean)).as("bb_mid"),
-      sf(when(m >= 20, bbMean + bbSd * 2.0)).as("bb_upper"),
-      sf(when(m >= 20, bbMean - bbSd * 2.0)).as("bb_lower"),
-      sf(TA.atrLast(hs, ls, cs, 14)).as("atr_14"),
-      sf(array_max(hs)).as("high_52w"),
-      sf(array_min(ls)).as("low_52w"),
-      sf(array_max(lastN(hs, 20))).as("recent_high"),
-      sf(array_min(lastN(ls, 20))).as("recent_low"))
+    val t = grouped.select(col("ticker"), size(col("h")).as("n_bars"),
+      expr("element_at(h, -1)").as("last"), FastTA.technicalsOf(col("h")).as("_t"))
+    val base = t.select(
+      col("ticker"), col("n_bars"),
+      col("last.date").as("date"),
+      sf(col("last.close")).as("close"),
+      sf(col("last.volume")).as("volume"),
+      sf(col("_t.rsi_14")).as("rsi_14"),
+      col("_t.macd").as("_macd"), col("_t.macd_signal").as("_macd_signal"),
+      sf(col("_t.sma_50")).as("sma_50"),
+      sf(col("_t.sma_200")).as("sma_200"),
+      sf(col("_t.ema_21")).as("ema_21"),
+      sf(col("_t.obv")).as("obv"),
+      sf(col("_t.bb_mid")).as("bb_mid"),
+      sf(col("_t.bb_upper")).as("bb_upper"),
+      sf(col("_t.bb_lower")).as("bb_lower"),
+      sf(col("_t.atr_14")).as("atr_14"),
+      sf(col("_t.high_52w")).as("high_52w"),
+      sf(col("_t.low_52w")).as("low_52w"),
+      sf(col("_t.recent_high")).as("recent_high"),
+      sf(col("_t.recent_low")).as("recent_low"),
+      col("_t.macd_hist").as("_macd_hist"))
     // F20 support/resistance (:372-386): strongest floor below close /
     // ceiling above close among {swing level, SMA, Bollinger band}
     val supportCands = Seq(col("recent_low"), col("sma_200"), col("bb_lower"))
     val resistCands = Seq(col("recent_high"), col("sma_50"), col("bb_upper"))
-    base
-      .withColumn("macd", sf(col("_macd.macd")))
-      .withColumn("macd_signal", sf(col("_macd.macd_signal")))
-      .withColumn("macd_hist", sf(col("_macd.macd_hist")))
-      .withColumn("support", coalesce(
+    base.withColumns(ListMap(
+      "macd" -> sf(col("_macd")),
+      "macd_signal" -> sf(col("_macd_signal")),
+      "macd_hist" -> sf(col("_macd_hist")),
+      "support" -> coalesce(
         supportCands.map(c => when(c < col("close"), c)).reduce(greatest(_, _)),
-        col("recent_low")))
-      .withColumn("resistance", coalesce(
+        col("recent_low")),
+      "resistance" -> coalesce(
         resistCands.map(c => when(c > col("close"), c)).reduce(least(_, _)),
-        col("recent_high")))
+        col("recent_high")),
       // trend booleans carried on the enriched row (§1.3 technicals)
-      .withColumn("price_above_sma_50",
-        when(col("sma_50").isNotNull, col("close") > col("sma_50")))
-      .withColumn("price_above_sma_200",
-        when(col("sma_200").isNotNull, col("close") > col("sma_200")))
-      .withColumn("macd_bullish",
-        when(col("_macd.macd").isNotNull, col("_macd.macd") > col("_macd.macd_signal")))
-      .drop("_macd")
+      "price_above_sma_50" -> when(col("sma_50").isNotNull, col("close") > col("sma_50")),
+      "price_above_sma_200" -> when(col("sma_200").isNotNull, col("close") > col("sma_200")),
+      "macd_bullish" -> when(col("_macd").isNotNull, col("_macd") > col("_macd_signal"))))
+      .drop("_macd", "_macd_signal", "_macd_hist")
   }
 
   /** F19 risk fields (enrichment-trigger/main.py:458-576). */
@@ -126,12 +115,13 @@ object Enrich {
     val reward = when(bull, res - price).otherwise(price - sup)
     val risk = when(bull, price - sup).otherwise(res - price)
     val rr = when(price > 0 && sup > 0 && res > 0 && risk > 0, round(reward / risk, 2))
-    df.withColumn("atr_normalized_move", atrMove)
-      .withColumn("mean_reversion_risk", mr)
-      .withColumn("move_overdone", coalesce(col("move_overdone"), lit(false)))
-      .withColumn("reversal_probability", round(rev, 3))
-      .withColumn("enrichment_quality_score", quality)
-      .withColumn("risk_reward_ratio", rr)
+    df.withColumns(ListMap(
+      "atr_normalized_move" -> atrMove,
+      "mean_reversion_risk" -> mr,
+      "move_overdone" -> coalesce(col("move_overdone"), lit(false)),
+      "reversal_probability" -> round(rev, 3),
+      "enrichment_quality_score" -> quality,
+      "risk_reward_ratio" -> rr))
   }
 
   /** F17 premium flags (enrichment-trigger/main.py:589-613; duplicated
@@ -151,24 +141,23 @@ object Enrich {
     val bearFlow = putVolOi > 2.0 && col("direction") === "BEARISH"
     val score = hedge.cast("int") + highRr.cast("int") + bullFlow.cast("int") +
       highAtr.cast("int") + bearFlow.cast("int")
-    df.withColumn("premium_hedge", hedge)
-      .withColumn("premium_high_rr", highRr)
-      .withColumn("premium_bull_flow", bullFlow)
-      .withColumn("premium_high_atr", highAtr)
-      .withColumn("premium_bear_flow", bearFlow)
-      .withColumn("premium_score", score)
-      .withColumn("is_premium_signal", score >= 1)
-      .withColumn("is_tradeable", (hedge && highRr) || (hedge && highAtr))
+    df.withColumns(ListMap(
+      "premium_hedge" -> hedge,
+      "premium_high_rr" -> highRr,
+      "premium_bull_flow" -> bullFlow,
+      "premium_high_atr" -> highAtr,
+      "premium_bear_flow" -> bearFlow,
+      "premium_score" -> score,
+      "is_premium_signal" -> (score >= 1),
+      "is_tradeable" -> ((hedge && highRr) || (hedge && highAtr))))
   }
 
   /** J2 wide enrichment join: signals x technicals x news, then risk +
     * premium columns (enrichment-trigger/main.py:620-737). */
   def run(signals: DataFrame, dailyBars: DataFrame, news: DataFrame): DataFrame = {
     val sig = signals.where(col("overnight_score") >= Scanner.MinScore)
-    val tech = technicals(dailyBars)
-      .withColumnRenamed("date", "tech_date")
-      .withColumnRenamed("close", "tech_close")
-      .withColumnRenamed("volume", "tech_volume")
+    val tech = technicals(dailyBars).withColumnsRenamed(Map(
+      "date" -> "tech_date", "close" -> "tech_close", "volume" -> "tech_volume"))
     val joined = sig
       .join(tech, Seq("ticker"), "left")
       .join(news.drop("summary"), Seq("ticker", "scan_date"), "left")

@@ -1,5 +1,7 @@
 package graft.pipelines
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -41,27 +43,30 @@ object Execution {
 
   /** J4+W10 regime telemetry from a macro series table
     * (symbol, date, close): VIX close at most recent date <= entry day,
-    * SPY SMA-10 trend vs last close (:75-132). Returns a 1-row frame. */
+    * SPY SMA-10 trend vs last close (:75-132). Returns a 1-row frame from
+    * one global aggregation, so the series is read once: the VIX close is
+    * an argmax over VIX rows, and SPY's last ten sessions are the head of
+    * its closes sorted by date descending (the mean sums them in that
+    * order, newest first). */
   def regimeContext(macroSeries: DataFrame, entryDay: Column): DataFrame = {
-    val hist = macroSeries.where(col("date") <= entryDay)
-    val vix = hist.where(col("symbol") === "^VIX")
-      .agg(max_by(col("close"), col("date")).as("VIX_at_entry"))
-    // last-10-sessions slice via distributed top-k (TakeOrderedAndProject),
-    // not an unpartitioned window — the macro series is bounded but the
-    // plan shape should still be the one you'd want at scale
-    val spy = hist.where(col("symbol") === "SPY")
-      .orderBy(col("date").desc).limit(10)
-      .agg(avg(col("close")).as("sma10"), max_by(col("close"), col("date")).as("last_close"),
-        count(lit(1)).as("n"))
-      .select(when(col("n") >= 10,
-        when(col("last_close") > col("sma10"), "BULLISH").otherwise("BEARISH"))
-        .as("SPY_trend_state"))
-    vix.crossJoin(spy)
+    val isSpy = col("symbol") === "SPY"
+    val isVix = col("symbol") === "^VIX"
+    // avg() semantics: nulls skipped, sum from 0.0 in row order
+    val closes = filter(transform(col("_spy"), _.getField("close")), _.isNotNull)
+    val sma10 = aggregate(closes, lit(0.0), _ + _) / size(closes)
+    macroSeries.where(col("date") <= entryDay)
+      .agg(
+        max_by(when(isVix, col("close")), when(isVix, col("date"))).as("VIX_at_entry"),
+        slice(sort_array(collect_list(when(isSpy, struct(col("date"), col("close")))),
+          asc = false), 1, 10).as("_spy"))
+      .select(col("VIX_at_entry"),
+        when(size(col("_spy")) >= 10,
+          when(element_at(col("_spy"), 1).getField("close") > sma10, "BULLISH")
+            .otherwise("BEARISH"))
+          .as("SPY_trend_state"))
   }
 
-  case class LedgerBar(
-      trade_key: String, t: Long, h: Double, l: Double, c: Double, v: Long,
-      entry_ts: Long, timeout_ts: Long, entry_day_end: Long)
+  case class LedgerBar(trade_key: String, t: Long, h: Double, l: Double, c: Double, v: Long)
 
   case class LedgerFill(
       trade_key: String, entry_timestamp: Long, entry_price: Double,
@@ -70,16 +75,17 @@ object Execution {
       realized_return_pct: Double, invalid_liquidity: Boolean)
 
   /** Bracket scan with the ledger's exact entry semantics (:261-318):
-    * entry bar = exact entry_ts match, else first bar after entry_ts but
+    * entry bar = exact entryTs match, else first bar after entryTs but
     * still within the entry day; zero-volume entry -> INVALID_LIQUIDITY;
-    * from the next bar: timeout at ts >= timeout_ts (close), stop-before-
+    * from the next bar: timeout at ts >= timeoutTs (close), stop-before-
     * target intrabar, exhausted -> TIMEOUT at last close. */
-  private[pipelines] def scanLedger(key: String, bars: Iterator[LedgerBar]): Iterator[LedgerFill] = {
+  private[pipelines] def scanLedger(entryTs: Long, timeoutTs: Long, entryDayEnd: Long)(
+      key: String, bars: Iterator[LedgerBar]): Iterator[LedgerFill] = {
     val buf = bars.toArray // minute bars per contract over 3 sessions: bounded (~1200)
     val entryIdx = {
-      val exact = buf.indexWhere(b => b.t == b.entry_ts)
+      val exact = buf.indexWhere(b => b.t == entryTs)
       if (exact >= 0) exact
-      else buf.indexWhere(b => b.t > b.entry_ts && b.t <= b.entry_day_end)
+      else buf.indexWhere(b => b.t > entryTs && b.t <= entryDayEnd)
     }
     if (entryIdx < 0 || buf(entryIdx).v == 0)
       return Iterator.single(LedgerFill(key, 0L, Double.NaN, Double.NaN, Double.NaN,
@@ -94,7 +100,7 @@ object Execution {
     var exitTs = 0L
     while (i < buf.length && exitReason == null) {
       val b = buf(i)
-      if (b.t >= b.timeout_ts) { exitReason = "TIMEOUT"; exitPrice = b.c; exitTs = b.t }
+      if (b.t >= timeoutTs) { exitReason = "TIMEOUT"; exitPrice = b.c; exitTs = b.t }
       else if (b.l <= stop) { exitReason = "STOP"; exitPrice = stop; exitTs = b.t }
       else if (b.h >= target) { exitReason = "TARGET"; exitPrice = target; exitTs = b.t }
       i += 1
@@ -115,24 +121,22 @@ object Execution {
       macroSeries: DataFrame, targetDate: Column, entryDay: Column,
       entryTs: Long, timeoutTs: Long, entryDayEnd: Long): DataFrame = {
     import spark.implicits._
-    val base = dedupFlag(eligible(enriched, targetDate))
-      .withColumn("opt_ticker", GraftFunctions.occTicker(
+    val base = dedupFlag(eligible(enriched, targetDate)).withColumns(ListMap(
+      "opt_ticker" -> GraftFunctions.occTicker(
         col("ticker"), col("recommended_expiration"),
-        col("direction") === "BULLISH", col("recommended_strike")))
-      .withColumn("is_skipped", col("is_duplicate"))
-      .withColumn("skip_reason",
-        when(col("is_duplicate"), "DEDUP_TICKER_DATE_SKIP")
-          .when(col("premium_score") < MinPremiumScore, "LOW_PREMIUM_SCORE_SKIP"))
-    val live = base.where(!col("is_skipped"))
-    val bars = minuteBars.join(
-        live.select(col("opt_ticker")).distinct(), Seq("opt_ticker"), "left_semi")
+        col("direction") === "BULLISH", col("recommended_strike")),
+      "is_skipped" -> col("is_duplicate"),
+      "skip_reason" -> when(col("is_duplicate"), "DEDUP_TICKER_DATE_SKIP")
+        .when(col("premium_score") < MinPremiumScore, "LOW_PREMIUM_SCORE_SKIP")))
+    // every contract's bracket scan: the bars table holds the traded
+    // contracts, and a semi-join on the live trades would plan `enriched`
+    // a second time; a skipped trade's fill is masked below
+    val bars = minuteBars
       .select(col("opt_ticker").as("trade_key"), col("t"), col("h"), col("l"),
-        col("c"), col("v"),
-        lit(entryTs).as("entry_ts"), lit(timeoutTs).as("timeout_ts"),
-        lit(entryDayEnd).as("entry_day_end"))
+        col("c"), col("v"))
     val fills = bars.as[LedgerBar]
       .groupByKey(_.trade_key)
-      .flatMapSortedGroups($"t")(scanLedger _)
+      .flatMapSortedGroups($"t")(scanLedger(entryTs, timeoutTs, entryDayEnd) _)
       .toDF()
       .withColumnRenamed("trade_key", "opt_ticker")
     val regime = regimeContext(macroSeries, entryDay)

@@ -1,6 +1,9 @@
 package graft.pipelines
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** §3.1 overnight-scanner pipeline, Spark-first.
@@ -8,9 +11,14 @@ import org.apache.spark.sql.functions._
   * Reference lifecycle (overnight_scanner.py:806-888): full-market snapshot
   * -> mover filter -> per-ticker chain aggregation (threads) -> additive
   * score -> cluster boost -> write. Here the per-ticker thread fan-out
-  * becomes one grouped aggregation over the whole chain table and the
-  * scoring is pure column algebra — no driver loops, shuffles once on
-  * `underlying` for the metrics and once for the cluster-boost join.
+  * becomes one grouped aggregation and the scoring is pure column algebra,
+  * with no driver loops. Each input is read once: the movers (snapshot ⋉
+  * broadcast universe) are left-joined to the chain and ONE grouped
+  * aggregation per mover computes the flow metrics and both sides' best
+  * contracts; after scoring and the broadcast metadata join, one window
+  * over (industry, direction) sizes the boost clusters. The joined chain
+  * rows shuffle once, on the mover, and the scored movers once more, for
+  * the cluster window.
   *
   * Semantics cited per block; quirks preserved deliberately (SURVEY §7.4.6):
   * the divergence rule flips `direction` AFTER direction-conditional
@@ -38,25 +46,55 @@ object Scanner {
 
   /** P1 universe semi-join (broadcast; overnight_scanner.py:329-331). */
   def inUniverse(movers: DataFrame, universe: DataFrame): DataFrame =
-    movers.join(broadcast(universe.select(upper(trim(col("value"))).as("ticker")).distinct()),
+    movers.join(broadcast(universe.select(upper(trim(col("value"))).as("ticker"))),
       Seq("ticker"), "left_semi")
+
+  /** The chain columns the scan reads. */
+  private val ChainColumns: Seq[String] = Seq("underlying", "contract_symbol", "option_type",
+    "expiration_date", "strike", "last_price", "bid", "ask", "volume", "open_interest",
+    "implied_volatility", "delta", "gamma", "theta", "vega")
 
   private def midOrLast: Column =
     when(col("bid").isNotNull && col("ask").isNotNull && col("bid") > 0 && col("ask") > 0,
       (col("bid") + col("ask")) / 2)
       .otherwise(when(col("last_price").isNotNull && col("last_price") =!= 0, col("last_price")))
 
-  /** A1-A5 per-side flow metrics over the flattened chain, one groupBy
-    * (overnight_scanner.py:364-399, 486-519). Side-conditional sums avoid
-    * a second shuffle for the call/put split. */
-  def flowMetrics(chain: DataFrame, underlyingPrice: DataFrame): DataFrame = {
-    val c = chain
-      .join(underlyingPrice.select(col("ticker").as("underlying"),
-        col("effective_price").as("upx")), Seq("underlying"), "left")
-      .withColumn("vol", coalesce(col("volume"), lit(0L)))
-      .withColumn("oi", coalesce(col("open_interest"), lit(0L)))
-      .withColumn("mid0", midOrLast)
-      .withColumn("isCall", col("option_type") === "call")
+  /** Per-contract columns over chain rows with the mover's price `upx`
+    * and the as-of date, in one projection: flow inputs (vol, oi, mid0,
+    * isCall), the P6 eligibility gate (overnight_scanner.py:400-447) and
+    * the contract score (:449-481). */
+  private def contracts(rows: DataFrame, upx: Column, asOf: Column): DataFrame = {
+    val vol = coalesce(col("volume"), lit(0L))
+    val oi = coalesce(col("open_interest"), lit(0L))
+    val dte = datediff(col("expiration_date"), asOf)
+    val mid = (col("bid") + col("ask")) / 2
+    val spreadPct = (col("ask") - col("bid")) / mid
+    val mny = when(col("option_type") === "call", col("strike") / upx)
+      .otherwise(upx / col("strike"))
+    val eligible = col("expiration_date").isNotNull &&
+      dte.between(7, 90) &&
+      col("bid") > 0 && col("ask") > 0 && mid > 0 &&
+      spreadPct <= 0.40 &&
+      vol >= 10 &&
+      (upx.isNull || upx <= 0 || mny.between(0.90, 1.25))
+    val adelta = abs(coalesce(col("delta"), lit(0.0)))
+    val score =
+      least(vol / 500.0, lit(5.0)) * 2.0 +
+        (lit(1.0) - least(spreadPct, lit(1.0))) * 3.0 +
+        least(vol / greatest(oi, lit(1L)), lit(3.0)) * 1.5 +
+        coalesce(col("gamma"), lit(0.0)) * 20.0 +
+        when(adelta.between(0.25, 0.50), 2.0).otherwise(0.0) -
+        abs(coalesce(col("theta"), lit(0.0))) / greatest(mid, lit(0.01)) * 1.0
+    rows.select(col("*"), upx.as("upx"), vol.as("vol"), oi.as("oi"),
+      midOrLast.as("mid0"), (col("option_type") === "call").as("isCall"),
+      dte.as("dte"), mid.as("mid"), spreadPct.as("spread_pct"),
+      eligible.as("eligible"), score.as("contract_score"))
+  }
+
+  /** A1-A5 per-side flow metrics as aggregates over a ticker's chain rows
+    * (overnight_scanner.py:364-399, 486-519). Side-conditional sums keep
+    * the call/put split inside the one grouped aggregation. */
+  private def flowMetrics: Seq[(String, Column)] = {
     def side(cond: Column, v: Column): Column = sum(when(cond, v).otherwise(lit(0.0)))
     // _dollar_vol (:364-375): volume * (mid ?? last) * 100, skip null mid/vol=0
     def dollarVol(cond: Column): Column =
@@ -72,70 +110,37 @@ object Scanner {
     def atmIv(cond: Column): Column =
       min_by(when(cond, col("implied_volatility")),
         when(cond, abs(coalesce(col("strike"), lit(0.0)) - col("upx"))))
-    c.groupBy(col("underlying").as("ticker"))
-      .agg(
-        dollarVol(col("isCall")).as("call_dollar_vol"),
-        dollarVol(!col("isCall")).as("put_dollar_vol"),
-        side(col("isCall"), col("vol")).cast("long").as("total_call_volume"),
-        side(!col("isCall"), col("vol")).cast("long").as("total_put_volume"),
-        (side(col("isCall"), col("vol")) /
-          greatest(side(col("isCall"), col("oi")), lit(1.0))).as("call_vol_oi"),
-        (side(!col("isCall"), col("vol")) /
-          greatest(side(!col("isCall"), col("oi")), lit(1.0))).as("put_vol_oi"),
-        activeStrikes(col("isCall")).as("call_active_strikes"),
-        activeStrikes(!col("isCall")).as("put_active_strikes"),
-        uoaDepth(col("isCall")).as("call_uoa_depth"),
-        uoaDepth(!col("isCall")).as("put_uoa_depth"),
-        atmIv(col("isCall")).as("atm_call_iv"),
-        atmIv(!col("isCall")).as("atm_put_iv"))
+    Seq(
+      "call_dollar_vol" -> dollarVol(col("isCall")),
+      "put_dollar_vol" -> dollarVol(!col("isCall")),
+      "total_call_volume" -> side(col("isCall"), col("vol")).cast("long"),
+      "total_put_volume" -> side(!col("isCall"), col("vol")).cast("long"),
+      "call_vol_oi" -> side(col("isCall"), col("vol")) /
+        greatest(side(col("isCall"), col("oi")), lit(1.0)),
+      "put_vol_oi" -> side(!col("isCall"), col("vol")) /
+        greatest(side(!col("isCall"), col("oi")), lit(1.0)),
+      "call_active_strikes" -> activeStrikes(col("isCall")),
+      "put_active_strikes" -> activeStrikes(!col("isCall")),
+      "call_uoa_depth" -> uoaDepth(col("isCall")),
+      "put_uoa_depth" -> uoaDepth(!col("isCall")),
+      "atm_call_iv" -> atmIv(col("isCall")),
+      "atm_put_iv" -> atmIv(!col("isCall")))
   }
 
-  /** P6 eligibility + contract score + A6 argmax per (underlying, side)
+  /** A6 argmax of the contract score among one side's eligible contracts
     * (overnight_scanner.py:400-481). Ties broken by contract_symbol
-    * (deterministic; the reference keeps first-encountered order). */
-  def bestContracts(chain: DataFrame, underlyingPrice: DataFrame, asOf: Column): DataFrame = {
-    val c = chain
-      .join(underlyingPrice.select(col("ticker").as("underlying"),
-        col("effective_price").as("upx")), Seq("underlying"), "left")
-      .withColumn("dte", datediff(col("expiration_date"), asOf))
-      .withColumn("vol", coalesce(col("volume"), lit(0L)))
-      .withColumn("oi", coalesce(col("open_interest"), lit(0L)))
-      .withColumn("mid", (col("bid") + col("ask")) / 2)
-      .withColumn("spread_pct", (col("ask") - col("bid")) / col("mid"))
-      .withColumn("mny",
-        when(col("option_type") === "call", col("strike") / col("upx"))
-          .otherwise(col("upx") / col("strike")))
-      .where(
-        col("expiration_date").isNotNull &&
-          col("dte").between(7, 90) &&
-          col("bid") > 0 && col("ask") > 0 && col("mid") > 0 &&
-          col("spread_pct") <= 0.40 &&
-          col("vol") >= 10 &&
-          (col("upx").isNull || col("upx") <= 0 || col("mny").between(0.90, 1.25)))
-      .withColumn("adelta", abs(coalesce(col("delta"), lit(0.0))))
-      .withColumn("contract_score",
-        least(col("vol") / 500.0, lit(5.0)) * 2.0 +
-          (lit(1.0) - least(col("spread_pct"), lit(1.0))) * 3.0 +
-          least(col("vol") / greatest(col("oi"), lit(1L)), lit(3.0)) * 1.5 +
-          coalesce(col("gamma"), lit(0.0)) * 20.0 +
-          when(col("adelta").between(0.25, 0.50), 2.0).otherwise(0.0) -
-          abs(coalesce(col("theta"), lit(0.0))) / greatest(col("mid"), lit(0.01)) * 1.0)
-    c.groupBy(col("underlying").as("ticker"), col("option_type"))
-      .agg(max_by(
-        struct(
-          col("contract_symbol"), col("strike"),
-          col("expiration_date"), col("dte"),
-          round(col("mid"), 2).as("mid_price"),
-          round(col("spread_pct"), 4).as("spread_pct"),
-          col("vol").as("volume"), col("oi").as("open_interest"),
-          round(col("implied_volatility"), 4).as("implied_volatility"),
-          round(col("gamma"), 6).as("gamma"),
-          round(coalesce(col("delta"), lit(0.0)), 4).as("delta"),
-          round(col("theta"), 4).as("theta"),
-          round(col("vega"), 4).as("vega"),
-          round(col("contract_score"), 3).as("contract_score")),
-        struct(col("contract_score"), col("contract_symbol"))).as("best"))
-  }
+    * (deterministic; the reference keeps first-encountered order); rows
+    * of other sides or failing the gate have a null ordering, which
+    * `max_by` skips. Fields stay raw here; [[run]] rounds the winner's. */
+  private def bestContract(optionType: String): Column =
+    max_by(
+      struct(
+        col("contract_symbol"), col("strike"), col("expiration_date"), col("dte"),
+        col("mid"), col("spread_pct"), col("vol").as("volume"),
+        col("oi").as("open_interest"), col("implied_volatility"), col("gamma"),
+        col("delta"), col("theta"), col("vega"), col("contract_score")),
+      when(col("eligible") && col("option_type") === optionType,
+        struct(col("contract_score"), col("contract_symbol"))))
 
   /** F18 six-signal additive score with signals[] accumulation and the
     * divergence direction flip (overnight_scanner.py:569-672). */
@@ -181,40 +186,35 @@ object Scanner {
       .when(divBull, lit("DIVERGENCE: heavy calls despite selloff"))
     val direction = when(divBear, "BEARISH").when(divBull, "BULLISH")
       .when(bullish, "BULLISH").otherwise("BEARISH")
-    movers
-      .withColumn("direction", direction)
-      .withColumn("overnight_score", (s1 + s2 + s3 + s4 + s5 + s6).cast("int"))
-      .withColumn("signals", filter(
-        array(s1label, s2label, s3label, s4label, s5label, s6label), x => x.isNotNull))
-      .withColumn("price_change_pct", pct)
-      .withColumn("total_options_dollar_volume", totalDv)
+    movers.withColumns(ListMap(
+      "direction" -> direction,
+      "overnight_score" -> (s1 + s2 + s3 + s4 + s5 + s6).cast("int"),
+      "signals" -> filter(
+        array(s1label, s2label, s3label, s4label, s5label, s6label), x => x.isNotNull),
+      "price_change_pct" -> pct,
+      "total_options_dollar_volume" -> totalDv))
   }
 
   /** A7 cluster boost (overnight_scanner.py:235-293): count (industry,
     * direction) clusters among scores >= 3; boost sub-threshold members
-    * 4->+1 / 5-7->+2 / 8+->+3, capped at 10. */
+    * 4->+1 / 5-7->+2 / 8+->+3, capped at 10. The cluster size is a window
+    * sum over (industry, direction), so the scored rows are planned once. */
   def clusterBoost(scored: DataFrame, metadata: DataFrame): DataFrame = {
     val tagged = scored.join(
       broadcast(metadata.select(col("ticker"), col("sector"), col("industry"))),
       Seq("ticker"), "left")
-    val clusters = tagged
-      .where(col("industry").isNotNull && col("overnight_score") >= ClusterMinScore)
-      .groupBy(col("industry"), col("direction"))
-      .agg(count(lit(1)).cast("int").as("cluster_size_raw"))
-    val boost = when(col("cluster_size") >= 8, 3)
-      .when(col("cluster_size") >= 5, 2).otherwise(1)
-    tagged.join(broadcast(clusters), Seq("industry", "direction"), "left")
-      .withColumn("cluster_size",
-        when(col("industry").isNotNull, coalesce(col("cluster_size_raw"), lit(0)))
-          .otherwise(lit(0)))
-      .withColumn("original_score", col("overnight_score"))
-      .withColumn("cluster_boost",
-        when(col("industry").isNotNull &&
-          col("overnight_score") < ClusterBoostThreshold &&
-          col("cluster_size") >= ClusterMinSize, boost).otherwise(0))
-      .withColumn("overnight_score",
-        least(col("original_score") + col("cluster_boost"), lit(10)).cast("int"))
-      .drop("cluster_size_raw")
+    val members = sum(when(col("industry").isNotNull &&
+      col("overnight_score") >= ClusterMinScore, 1).otherwise(0))
+      .over(Window.partitionBy(col("industry"), col("direction")))
+    val size = when(col("industry").isNotNull, members.cast("int")).otherwise(lit(0))
+    val boost = when(col("industry").isNotNull &&
+      col("overnight_score") < ClusterBoostThreshold && size >= ClusterMinSize,
+      when(size >= 8, 3).when(size >= 5, 2).otherwise(1)).otherwise(0)
+    tagged.withColumns(ListMap(
+      "cluster_size" -> size,
+      "original_score" -> col("overnight_score"),
+      "cluster_boost" -> boost,
+      "overnight_score" -> least(col("overnight_score") + boost, lit(10)).cast("int")))
   }
 
   /** Full pipeline: snapshots + chain + universe + metadata -> scored,
@@ -222,21 +222,25 @@ object Scanner {
     * overnight_scanner.py:883-885). */
   def run(snapshots: DataFrame, chain: DataFrame, universe: DataFrame,
       metadata: DataFrame, asOf: Column, scanDate: Column): DataFrame = {
+    // one row per mover; the row id keeps duplicated snapshot rows apart
     val m = inUniverse(movers(snapshots), universe)
-    val px = m.select(col("ticker"), col("effective_price"))
-    val metrics = flowMetrics(chain, px)
-    val best = bestContracts(chain, px, asOf)
-      .groupBy("ticker")
-      .pivot("option_type", Seq("call", "put"))
-      .agg(first(col("best")))
-    val scored = score(m.join(metrics, Seq("ticker"), "left"))
-      .join(best, Seq("ticker"), "left")
+      .select(col("ticker"), col("todaysChangePerc"), col("effective_price"),
+        col("day_volume"), monotonically_increasing_id().as("_mover"))
+    val c = chain.select(ChainColumns.map(col): _*)
+    val rows = contracts(m.join(c, m("ticker") === c("underlying"), "left"),
+      col("effective_price"), asOf)
+    // a mover without chain rows gets null metrics, not zero sums
+    val hasChain = count(col("underlying")) > 0
+    val aggs = Seq("todaysChangePerc", "effective_price", "day_volume").map(c => first(col(c)).as(c)) ++
+      flowMetrics.map { case (name, c) => when(hasChain, c).as(name) } ++
+      Seq(bestContract("call").as("call"), bestContract("put").as("put"))
+    val perMover = rows.groupBy(col("ticker"), col("_mover")).agg(aggs.head, aggs.tail: _*)
+    val scored = score(perMover)
       .withColumn("best",
         when(col("direction") === "BULLISH", col("call")).otherwise(col("put")))
     clusterBoost(scored, metadata)
-      .withColumn("scan_date", scanDate)
       .select(
-        col("scan_date"), col("ticker"), col("direction"),
+        scanDate.as("scan_date"), col("ticker"), col("direction"),
         col("overnight_score"), col("original_score"), col("cluster_boost"),
         col("cluster_size"), col("sector"), col("industry"),
         col("price_change_pct"), col("effective_price").as("underlying_price"),
@@ -253,14 +257,15 @@ object Scanner {
         col("best.strike").as("recommended_strike"),
         col("best.expiration_date").as("recommended_expiration"),
         col("best.dte").as("recommended_dte"),
-        col("best.mid_price").as("recommended_mid_price"),
-        col("best.spread_pct").as("recommended_spread_pct"),
-        col("best.contract_score").as("contract_score"),
-        col("best.delta").as("recommended_delta"),
-        col("best.gamma").as("recommended_gamma"),
-        col("best.theta").as("recommended_theta"),
-        col("best.vega").as("recommended_vega"),
-        col("best.implied_volatility").as("recommended_iv"),
+        round(col("best.mid"), 2).as("recommended_mid_price"),
+        round(col("best.spread_pct"), 4).as("recommended_spread_pct"),
+        round(col("best.contract_score"), 3).as("contract_score"),
+        when(col("best").isNotNull, round(coalesce(col("best.delta"), lit(0.0)), 4))
+          .as("recommended_delta"),
+        round(col("best.gamma"), 6).as("recommended_gamma"),
+        round(col("best.theta"), 4).as("recommended_theta"),
+        round(col("best.vega"), 4).as("recommended_vega"),
+        round(col("best.implied_volatility"), 4).as("recommended_iv"),
         col("best.volume").as("recommended_volume"),
         col("best.open_interest").as("recommended_oi"))
   }

@@ -70,7 +70,7 @@ object DomainOps {
     * onto lineitem: side = linestatus, vol = quantity, oi = discount*1000,
     * mid = extendedprice/100. One groupBy produces per-side dollar volume,
     * vol/OI ratio, active-strike counts, UOA depth, and the nearest-to-ATM
-    * argmin — the exact shape of Scanner.flowMetrics, oracle-checked. */
+    * argmin — the exact shape of Scanner's flow metrics, oracle-checked. */
   def q62FlowMetrics(spark: SparkSession, dir: String): DataFrame = {
     val c = Tables.lineitem(spark, dir)
       .withColumn("isCall", $"l_linestatus" === "O")

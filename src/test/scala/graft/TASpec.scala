@@ -49,6 +49,28 @@ class TASpec extends AnyFunSuite with SparkFixture {
       }
   }
 
+  test("codegen'd RSI agrees with the declarative fold on NaN closes") {
+    import spark.implicits._
+    val withNaN = Seq(closes.updated(9, Double.NaN), closes.updated(29, Double.NaN)).toDF("vs")
+    withNaN.select(TA.rsiLast(col("vs"), 14), TA.rsiLastDeclarative(col("vs"), 14))
+      .collect().foreach { r =>
+        assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ==
+          java.lang.Double.doubleToLongBits(r.getDouble(1)))
+      }
+  }
+
+  test("two graft_rsi_last in one projection compile into whole-stage code") {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    // closes shifted by the row id: not foldable, so the projection is generated
+    val vs = array(closes.map(c => lit(c) + col("id")): _*)
+    val df = spark.range(3).select(TA.rsiLast(vs, 14).as("a"), TA.rsiLast(vs, 7).as("b"))
+    val stages = df.queryExecution.executedPlan.collect { case w: WholeStageCodegenExec => w }
+    assert(stages.nonEmpty)
+    stages.foreach { w => CodeGenerator.compile(w.doCodeGen()._2) } // throws on a compile error
+    assert(df.collect().forall(r => !r.isNullAt(0) && !r.isNullAt(1)))
+  }
+
   test("rsiLast is null below n diffs and 100 when no losses (W3 edges)") {
     import spark.implicits._
     val tiny = Seq(Seq(1.0, 2.0, 3.0)).toDF("vs")
