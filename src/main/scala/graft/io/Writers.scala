@@ -53,7 +53,7 @@ object Writers {
     partitionCol match {
       case Some(p) =>
         val once = updates.localCheckpoint()
-        val touched = target.join(broadcast(once.select(col(p))), Seq(p), "left_semi")
+        val touched = target.join(broadcast(once.select(col(p)).distinct()), Seq(p), "left_semi")
         val merged = Joins.mergeUpdate(touched, once, keys, updateCols)
         // rewrite only the touched partitions (dynamic overwrite)
         val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")

@@ -128,10 +128,10 @@ object Execution {
       "is_skipped" -> col("is_duplicate"),
       "skip_reason" -> when(col("is_duplicate"), "DEDUP_TICKER_DATE_SKIP")
         .when(col("premium_score") < MinPremiumScore, "LOW_PREMIUM_SCORE_SKIP")))
-    // every contract's bracket scan: the bars table holds the traded
-    // contracts, and a semi-join on the live trades would plan `enriched`
-    // a second time; a skipped trade's fill is masked below
-    val bars = minuteBars
+      .localCheckpoint(true) // the trades feed the bars filter and the join: read once
+    // one live trade per (ticker, date), so its contracts are already distinct
+    val live = base.where(!col("is_skipped")).select(col("opt_ticker"))
+    val bars = minuteBars.join(broadcast(live), Seq("opt_ticker"), "left_semi")
       .select(col("opt_ticker").as("trade_key"), col("t"), col("h"), col("l"),
         col("c"), col("v"))
     val fills = bars.as[LedgerBar]

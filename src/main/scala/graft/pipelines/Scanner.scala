@@ -13,12 +13,13 @@ import org.apache.spark.sql.functions._
   * score -> cluster boost -> write. Here the per-ticker thread fan-out
   * becomes one grouped aggregation and the scoring is pure column algebra,
   * with no driver loops. Each input is read once: the movers (snapshot ⋉
-  * broadcast universe) are left-joined to the chain and ONE grouped
-  * aggregation per mover computes the flow metrics and both sides' best
-  * contracts; after scoring and the broadcast metadata join, one window
-  * over (industry, direction) sizes the boost clusters. The joined chain
-  * rows shuffle once, on the mover, and the scored movers once more, for
-  * the cluster window.
+  * broadcast universe) are checkpointed, the chain streams past a
+  * broadcast of their prices, and ONE grouped aggregation per mover
+  * computes the flow metrics and both sides' best contracts; each chain
+  * partition is partially aggregated before the chain's one shuffle, on
+  * the mover. The per-mover rows are left-joined back to the checkpointed
+  * movers, and after scoring and the broadcast metadata join one window
+  * over (industry, direction) sizes the boost clusters.
   *
   * Semantics cited per block; quirks preserved deliberately (SURVEY §7.4.6):
   * the divergence rule flips `direction` AFTER direction-conditional
@@ -59,11 +60,12 @@ object Scanner {
       (col("bid") + col("ask")) / 2)
       .otherwise(when(col("last_price").isNotNull && col("last_price") =!= 0, col("last_price")))
 
-  /** Per-contract columns over chain rows with the mover's price `upx`
-    * and the as-of date, in one projection: flow inputs (vol, oi, mid0,
-    * isCall), the P6 eligibility gate (overnight_scanner.py:400-447) and
-    * the contract score (:449-481). */
-  private def contracts(rows: DataFrame, upx: Column, asOf: Column): DataFrame = {
+  /** Per-contract columns over chain rows that carry the mover's price
+    * `upx`, in one projection: flow inputs (vol, oi, mid0, isCall), the P6
+    * eligibility gate (overnight_scanner.py:400-447) and the contract
+    * score (:449-481). */
+  private def contracts(rows: DataFrame, asOf: Column): DataFrame = {
+    val upx = col("upx")
     val vol = coalesce(col("volume"), lit(0L))
     val oi = coalesce(col("open_interest"), lit(0L))
     val dte = datediff(col("expiration_date"), asOf)
@@ -85,7 +87,7 @@ object Scanner {
         coalesce(col("gamma"), lit(0.0)) * 20.0 +
         when(adelta.between(0.25, 0.50), 2.0).otherwise(0.0) -
         abs(coalesce(col("theta"), lit(0.0))) / greatest(mid, lit(0.01)) * 1.0
-    rows.select(col("*"), upx.as("upx"), vol.as("vol"), oi.as("oi"),
+    rows.select(col("*"), vol.as("vol"), oi.as("oi"),
       midOrLast.as("mid0"), (col("option_type") === "call").as("isCall"),
       dte.as("dte"), mid.as("mid"), spreadPct.as("spread_pct"),
       eligible.as("eligible"), score.as("contract_score"))
@@ -222,19 +224,21 @@ object Scanner {
     * overnight_scanner.py:883-885). */
   def run(snapshots: DataFrame, chain: DataFrame, universe: DataFrame,
       metadata: DataFrame, asOf: Column, scanDate: Column): DataFrame = {
-    // one row per mover; the row id keeps duplicated snapshot rows apart
+    // one row per mover, read once; the row id keeps duplicated snapshot
+    // rows apart and is fixed by the checkpoint
     val m = inUniverse(movers(snapshots), universe)
       .select(col("ticker"), col("todaysChangePerc"), col("effective_price"),
         col("day_volume"), monotonically_increasing_id().as("_mover"))
-    val c = chain.select(ChainColumns.map(col): _*)
-    val rows = contracts(m.join(c, m("ticker") === c("underlying"), "left"),
-      col("effective_price"), asOf)
-    // a mover without chain rows gets null metrics, not zero sums
-    val hasChain = count(col("underlying")) > 0
-    val aggs = Seq("todaysChangePerc", "effective_price", "day_volume").map(c => first(col(c)).as(c)) ++
-      flowMetrics.map { case (name, c) => when(hasChain, c).as(name) } ++
+      .localCheckpoint(true)
+    val px = m.select(col("ticker").as("underlying"), col("effective_price").as("upx"),
+      col("_mover"))
+    val rows = contracts(chain.select(ChainColumns.map(col): _*)
+      .join(broadcast(px), Seq("underlying")), asOf)
+    val aggs = flowMetrics.map { case (name, c) => c.as(name) } ++
       Seq(bestContract("call").as("call"), bestContract("put").as("put"))
-    val perMover = rows.groupBy(col("ticker"), col("_mover")).agg(aggs.head, aggs.tail: _*)
+    // a mover without chain rows has no group: null metrics, not zero sums
+    val perMover = m.join(
+      rows.groupBy(col("_mover")).agg(aggs.head, aggs.tail: _*), Seq("_mover"), "left")
     val scored = score(perMover)
       .withColumn("best",
         when(col("direction") === "BULLISH", col("call")).otherwise(col("put")))

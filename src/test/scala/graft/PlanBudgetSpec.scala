@@ -6,16 +6,19 @@ import java.sql.Date
 import scala.collection.mutable
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.LeftSemi
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import graft.io.Writers
 import graft.pipelines.{Arena, Enrich, Execution, Scanner, Tracking}
 
-/** Read budgets of the overnight stages: each stage's physical plan scans
-  * each parquet input once. A sub-plan referenced twice (a self-join, a
+/** Read budgets of the overnight stages: each stage's physical plans scan
+  * each parquet input once, summed over every query the stage runs (a
+  * checkpoint's included). A sub-plan referenced twice (a self-join, a
   * semi-join feeding a later join, one frame feeding two aggregates) shows
   * up here as a second scan leaf, before any exchange reuse hides it. */
 class PlanBudgetSpec extends AnyFunSuite with SparkFixture {
@@ -43,6 +46,39 @@ class PlanBudgetSpec extends AnyFunSuite with SparkFixture {
 
   private def scans(df: DataFrame): Map[String, Int] = scans(df.queryExecution.executedPlan)
 
+  private def readsDir(p: SparkPlan): Boolean = nodes(p).exists {
+    case s: FileSourceScanExec => s.relation.location.rootPaths.exists(_.toString.contains(dir))
+    case _ => false
+  }
+
+  /** Parquet scan leaves per input over every query `body` runs on this
+    * spec's files; `body`'s last query is named `last`. */
+  private def readsDuring[T](last: String)(body: => T): (T, Map[String, Int]) = {
+    val seen = mutable.ArrayBuffer[(String, SparkPlan)]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.synchronized { seen += f -> qe.executedPlan }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val out = try {
+      val r = body
+      // events arrive in order, the last query's last
+      def done = seen.synchronized(seen.exists { case (f, p) => f == last && readsDir(p) })
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!done && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(done, s"no '$last' query seen")
+      r
+    } finally spark.listenerManager.unregister(listener)
+    (out, scans(seen.synchronized(seen.toList).map(_._2).filter(readsDir): _*))
+  }
+
+  /** Runs `df` to the noop sink (a query named "overwrite"). */
+  private def noop(df: DataFrame): DataFrame = {
+    df.write.format("noop").mode("overwrite").save()
+    df
+  }
+
   private val scanDate = lit("2026-03-18").cast("date")
 
   test("Scanner.run reads snapshots, chain, universe and metadata once each") {
@@ -65,9 +101,10 @@ class PlanBudgetSpec extends AnyFunSuite with SparkFixture {
     val universe = put("universe", Seq("AAA", "BBB").toDF("value"))
     val metadata = put("metadata", Seq(("AAA", "T", "Chips"), ("BBB", "T", "Chips"))
       .toDF("ticker", "sector", "industry"))
-    val signals = Scanner.run(snapshots, chain, universe, metadata, scanDate, scanDate)
-    assert(scans(signals) == Map("snapshots" -> 1, "chain" -> 1, "universe" -> 1,
-      "metadata" -> 1))
+    val (signals, reads) = readsDuring("overwrite") {
+      noop(Scanner.run(snapshots, chain, universe, metadata, scanDate, scanDate))
+    }
+    assert(reads == Map("snapshots" -> 1, "chain" -> 1, "universe" -> 1, "metadata" -> 1))
     assert(signals.count() == 2)
   }
 
@@ -91,7 +128,7 @@ class PlanBudgetSpec extends AnyFunSuite with SparkFixture {
     assert(scans(Arena.consensus(picks)) == Map("picks" -> 1))
   }
 
-  test("Execution.run reads enriched, minute_bars and macro once each") {
+  test("Execution.run reads enriched, minute_bars and macro once each, live bars only") {
     import spark.implicits._
     val enriched = put("enriched", Seq(
         ("AAA", "BULLISH", 3, 500L, 100L, 101.0, "AAA_C"),
@@ -107,9 +144,18 @@ class PlanBudgetSpec extends AnyFunSuite with SparkFixture {
       .toDF("opt_ticker", "t", "o", "h", "l", "c", "v"))
     val macroSeries = put("macro", (1 to 12).map(i => ("SPY", d(f"2026-03-$i%02d"), 500.0 + i))
       .toDF("symbol", "date", "close"))
-    val ledger = Execution.run(spark, enriched, minute, macroSeries, scanDate,
-      lit("2026-03-19").cast("date"), 1000L, 5000L, 3000L)
-    assert(scans(ledger) == Map("enriched" -> 1, "minute_bars" -> 1, "macro" -> 1))
+    val (ledger, reads) = readsDuring("overwrite") {
+      noop(Execution.run(spark, enriched, minute, macroSeries, scanDate,
+        lit("2026-03-19").cast("date"), 1000L, 5000L, 3000L))
+    }
+    assert(reads == Map("enriched" -> 1, "minute_bars" -> 1, "macro" -> 1))
+    // the bracket scan sees only the live trades' bars: a broadcast
+    // semi-join filters minute_bars before they shuffle
+    assert(nodes(ledger.queryExecution.executedPlan).exists {
+      case j: BroadcastHashJoinExec =>
+        j.joinType == LeftSemi && scans(j.left).contains("minute_bars")
+      case _ => false
+    })
     assert(ledger.count() == 2)
   }
 
@@ -133,28 +179,11 @@ class PlanBudgetSpec extends AnyFunSuite with SparkFixture {
       .select("ticker", "scan_date", "direction", "signal_price")
     val updates = Tracking.backfill(signals, bars)
       .select((Seq("ticker", "scan_date") ++ cols).map(col): _*)
-
-    val seen = mutable.ArrayBuffer[(String, SparkPlan)]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        seen.synchronized { seen += f -> qe.executedPlan }
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
+    val (_, reads) = readsDuring("command") {
       Writers.mergeUpsert(spark, tracking, updates, Seq("ticker", "scan_date"), cols,
         partitionCol = Some("scan_date"))
-      // the write is the merge's last query; events arrive in order
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (seen.synchronized(!seen.exists(_._1 == "command")) && System.nanoTime() < deadline)
-        Thread.sleep(20)
-    } finally spark.listenerManager.unregister(listener)
-    val mine = seen.synchronized(seen.toList).map(_._2)
-      .filter(p => nodes(p).exists {
-        case s: FileSourceScanExec => s.relation.location.rootPaths.exists(_.toString.contains(dir))
-        case _ => false
-      })
-    assert(scans(mine: _*).get("daily_bars").contains(1), scans(mine: _*))
+    }
+    assert(reads.get("daily_bars").contains(1), reads)
     val after = spark.read.parquet(tracking).collect()
     assert(after.length == 3)
     assert(after.count(r => !r.isNullAt(r.fieldIndex("peak_return_3d"))) == 2)
